@@ -13342,11 +13342,6 @@ def _rename_pattern(fn: str) -> "re.Pattern[str]":
     return re.compile(rf"\b{fn}\(")
 
 
-@functools.lru_cache(maxsize=None)
-def _cast_pattern(fn: str) -> "re.Pattern[str]":
-    return re.compile(rf"\b{fn}\(([^()]*)\)")
-
-
 def _find_call(
     sql: str, fn: str, pos: int = 0
 ) -> tuple[int, int, list[str]] | None:

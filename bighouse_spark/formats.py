@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import re
+import secrets
 import struct
 from datetime import date, datetime, timedelta
 from decimal import Decimal
@@ -162,7 +163,32 @@ def _quoted_elem(v: Any) -> str:
     return _text(v)
 
 
-def _json_value(v: Any) -> Any:
+# CH prints Decimals in JSON as exact number tokens
+# (output_format_json_quote_decimals = 0, trailing zeros dropped).
+# json.dumps has no hook that emits a raw token, so a fractional
+# Decimal travels through it as a marked string whose quotes
+# _json_dumps strips. The marker holds a per-process random nonce, so
+# no user string can forge one.
+_DECIMAL_MARK = "bhdec" + secrets.token_hex(8) + ":"
+_DECIMAL_TOKEN = re.compile(f'"{_DECIMAL_MARK}(-?[0-9.]+)"')
+
+
+def _json_decimal(v: Decimal) -> Any:
+    if v == v.to_integral_value():
+        return int(v)  # json.dumps prints ints exactly
+    return _DECIMAL_MARK + format(v.normalize(), "f")
+
+
+def _json_dumps(doc: Any, **kw: Any) -> str:
+    out = json.dumps(doc, ensure_ascii=False, **kw)
+    if _DECIMAL_MARK in out:
+        out = _DECIMAL_TOKEN.sub(r"\1", out)
+    return out
+
+
+def _json_value(v: Any, decimal: Any = _json_decimal) -> Any:
+    """``v`` as a json.dumps-able value; ``decimal`` converts Decimals
+    (pass ``float`` for consumers that are not _json_dumps)."""
     if isinstance(v, float) and (v != v or v in (float("inf"), float("-inf"))):
         # Bare NaN/Infinity is not valid JSON (json.dumps would emit
         # it anyway); CH renders denormals as null by default.
@@ -172,13 +198,13 @@ def _json_value(v: Any) -> Any:
     if isinstance(v, date):
         return v.isoformat()
     if isinstance(v, Decimal):
-        return float(v)
+        return decimal(v)
     if isinstance(v, bytes):
         return v.decode("utf-8", "replace")
     if isinstance(v, (list, tuple)):
-        return [_json_value(x) for x in v]
+        return [_json_value(x, decimal) for x in v]
     if isinstance(v, dict):
-        return {str(k): _json_value(x) for k, x in v.items()}
+        return {str(k): _json_value(x, decimal) for k, x in v.items()}
     return v
 
 
@@ -228,7 +254,7 @@ def _render_json(cols, rows, types, elapsed) -> bytes:
             "elapsed": elapsed, "rows_read": len(rows), "bytes_read": 0
         },
     }
-    return (json.dumps(doc, ensure_ascii=False, indent=1) + "\n").encode()
+    return (_json_dumps(doc, indent=1) + "\n").encode()
 
 
 def _render_json_compact(cols, rows, types, elapsed) -> bytes:
@@ -243,15 +269,12 @@ def _render_json_compact(cols, rows, types, elapsed) -> bytes:
             "elapsed": elapsed, "rows_read": len(rows), "bytes_read": 0
         },
     }
-    return (json.dumps(doc, ensure_ascii=False, indent=1) + "\n").encode()
+    return (_json_dumps(doc, indent=1) + "\n").encode()
 
 
 def _render_json_each_row(cols, rows, types, elapsed) -> bytes:
     out = [
-        json.dumps(
-            {c: _json_value(v) for c, v in zip(cols, row)},
-            ensure_ascii=False,
-        )
+        _json_dumps({c: _json_value(v) for c, v in zip(cols, row)})
         for row in rows
     ]
     return ("\n".join(out) + ("\n" if out else "")).encode()
@@ -259,7 +282,7 @@ def _render_json_each_row(cols, rows, types, elapsed) -> bytes:
 
 def _render_json_compact_each_row(cols, rows, types, elapsed) -> bytes:
     out = [
-        json.dumps([_json_value(v) for v in row], ensure_ascii=False)
+        _json_dumps([_json_value(v) for v in row])
         for row in rows
     ]
     return ("\n".join(out) + ("\n" if out else "")).encode()
@@ -432,14 +455,14 @@ def _render_json_columns(cols, rows, types, elapsed) -> bytes:
         c: [_json_value(row[i]) for row in rows]
         for i, c in enumerate(cols)
     }
-    return (json.dumps(doc, ensure_ascii=False, indent=1) + "\n").encode()
+    return (_json_dumps(doc, indent=1) + "\n").encode()
 
 
 def _render_json_compact_columns(cols, rows, types, elapsed) -> bytes:
     doc = [
         [_json_value(row[i]) for row in rows] for i in range(len(cols))
     ]
-    return (json.dumps(doc, ensure_ascii=False) + "\n").encode()
+    return (_json_dumps(doc) + "\n").encode()
 
 
 def _render_json_object_each_row(cols, rows, types, elapsed) -> bytes:
@@ -447,7 +470,7 @@ def _render_json_object_each_row(cols, rows, types, elapsed) -> bytes:
         f"row_{i}": {c: _json_value(v) for c, v in zip(cols, row)}
         for i, row in enumerate(rows, 1)
     }
-    return (json.dumps(doc, ensure_ascii=False, indent=1) + "\n").encode()
+    return (_json_dumps(doc, indent=1) + "\n").encode()
 
 
 _XML_NAME_RE = re.compile(r"^[A-Za-z_][A-Za-z0-9_.-]*$")
@@ -536,7 +559,7 @@ def _arrow_table(cols, rows, types):
     return pa.table(
         {
             c: [
-                _json_value(row[i]) for row in rows
+                _json_value(row[i], float) for row in rows
             ]
             for i, c in enumerate(cols)
         }
@@ -1305,14 +1328,11 @@ class StreamRenderer:
         if self._encs is not None:
             return b"".join(e(v) for e, v in zip(self._encs, row))
         if f == "JSONEachRow":
-            line = json.dumps(
-                {c: _json_value(v) for c, v in zip(self._cols, row)},
-                ensure_ascii=False,
+            line = _json_dumps(
+                {c: _json_value(v) for c, v in zip(self._cols, row)}
             )
         elif f == "JSONCompactEachRow":
-            line = json.dumps(
-                [_json_value(v) for v in row], ensure_ascii=False
-            )
+            line = _json_dumps([_json_value(v) for v in row])
         elif f.startswith("CSV"):
             line = ",".join(_csv_cell(v) for v in row)
         else:  # TabSeparated family

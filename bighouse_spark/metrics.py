@@ -23,6 +23,8 @@ import threading
 from contextlib import contextmanager
 from typing import TYPE_CHECKING, Iterator
 
+from bighouse_spark.sources.readers import source_memo_stats
+
 if TYPE_CHECKING:  # pragma: no cover - typing only
     from bighouse_spark.engine import BigHouseEngine
 
@@ -168,6 +170,23 @@ def render(
         "bighouse_queries_inflight", "gauge",
         "Queries executing right now.",
         [({}, inflight)],
+    )
+
+    hits, misses, entries = source_memo_stats(engine.spark)
+    w.metric(
+        "bighouse_source_memo_hits_total", "counter",
+        "file() source reads answered from the source memo.",
+        [({}, hits)],
+    )
+    w.metric(
+        "bighouse_source_memo_misses_total", "counter",
+        "Memoizable file() source reads that had to be resolved.",
+        [({}, misses)],
+    )
+    w.metric(
+        "bighouse_source_memo_entries", "gauge",
+        "Resolved source relations held in the source memo.",
+        [({}, entries)],
     )
 
     with _lock:

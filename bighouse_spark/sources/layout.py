@@ -95,25 +95,3 @@ def zorder_key(
         )
     return reduce(add, terms)
 
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    fmt: str = "parquet",
-    mode: str = "overwrite",
-    bits: int = BITS_PER_DIM,
-) -> None:
-    """Write ``df`` z-ordered on ``cols``: range-repartition on the
-    z-key (tight per-file key ranges → tight per-file min/max on
-    EVERY dimension) and sort within each file (row-group pruning)."""
-    z = zorder_key(df, cols, bits)
-    (
-        df.withColumn("__bh_z", z)
-        .repartitionByRange("__bh_z")
-        .sortWithinPartitions("__bh_z")
-        .drop("__bh_z")
-        .write.format(fmt)
-        .mode(mode)
-        .save(path)
-    )

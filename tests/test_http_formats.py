@@ -9,6 +9,7 @@ import json
 import urllib.error
 import urllib.parse
 import urllib.request
+from decimal import Decimal
 
 import pytest
 
@@ -185,6 +186,32 @@ def test_types_in_json_meta_cover_dates_and_decimals(server_url):
     assert types["m"] == "Decimal(10, 2)"
     assert types["t"].startswith("DateTime64")
     assert doc["data"][0]["d"] == "2024-01-02"
+
+
+@pytest.mark.parametrize("fmt", ["JSON", "JSONEachRow", "JSONCompact"])
+def test_json_decimals_are_exact_number_tokens(server_url, fmt):
+    # Above 2**53 a double drops the low digits; CH's default
+    # (output_format_json_quote_decimals = 0) prints the exact number.
+    big = 2**53 * 1000 + 7
+    status, body, _ = _get_raw(
+        _q(
+            server_url,
+            f"SELECT CAST('{big}' AS DECIMAL(38, 0)) AS h, "
+            "CAST('-12345678901234567.125' AS DECIMAL(38, 3)) AS f "
+            f"FORMAT {fmt}",
+        )
+    )
+    assert status == 200
+    text = body.decode()
+    assert f"{big}" in text and "-12345678901234567.125" in text
+    doc = json.loads(text, parse_float=Decimal)
+    if fmt == "JSONEachRow":
+        row = [doc["h"], doc["f"]]
+    elif fmt == "JSON":
+        row = [doc["data"][0]["h"], doc["data"][0]["f"]]
+    else:
+        row = doc["data"][0]
+    assert row == [big, Decimal("-12345678901234567.125")]
 
 
 def test_error_is_text_with_exception_code(server_url):
